@@ -9,9 +9,12 @@
         [--pitfalls-output DIR] [--analysis-output FILE]
 
 Reads the pages table(s), runs the quality-filter pipeline, writes
-pages_out / metrics / lineage / host_metrics (+ per-doc JSON reports),
-prints the summary JSON. With --resume, processes only buckets missing
-from the output checkpoint (streaming/incremental.py).
+pages_out, then metrics / lineage / host_metrics / per-doc JSON reports in
+one concurrent round from the written sink (plans/pipeline.write_tail),
+and prints the summary JSON. Its totals are the counters observed during
+those writes, so the summary costs one collect of the 15-row metrics table
+and no count job. With --resume, processes only buckets missing from the
+output checkpoint (streaming/incremental.py), then runs the same tail.
 
 CLI surface mirrors the reference cli.py:8-38:
   --input is multi-valued with per-item dispatch (cli.py:11-16's URL/file
@@ -155,11 +158,9 @@ def main(argv: list[str] | None = None) -> None:
 
     from functools import reduce
 
-    from rsmetacheck_spark.operators.metrics import host_metrics_table
-    from rsmetacheck_spark.operators.report import per_doc_reports, summary_report
-    from rsmetacheck_spark.plans.pipeline import materialize, read_pages
+    from rsmetacheck_spark.operators.report import summary_report
+    from rsmetacheck_spark.plans import pipeline
     from rsmetacheck_spark.session import get_spark
-    from rsmetacheck_spark.sources.tables import write_table
     from rsmetacheck_spark.streaming.incremental import read_resumed, resume_materialize
 
     spark = get_spark("rsmetacheck_main", cores=args.cpus)
@@ -169,7 +170,7 @@ def main(argv: list[str] | None = None) -> None:
     payload = "text" if args.skip_extract else "html"
     parts = []
     for path in args.input:
-        df = read_pages(spark, path)
+        df = pipeline.read_pages(spark, path)
         if payload not in df.columns:
             raise SystemExit(
                 f"--input {path}: missing required column {payload!r} "
@@ -184,33 +185,25 @@ def main(argv: list[str] | None = None) -> None:
     )
     snapshot = args.snapshot or f"input:{','.join(args.input)}"
 
+    # Both paths end in pipeline.write_tail (metrics, lineage, host_metrics
+    # and reports in one concurrent round); the summary totals are counters
+    # observed during a write, never a separate count job.
     if args.resume:
         resume_materialize(spark, pages, args.output,
                            text_input=args.skip_extract)
-        pages_out = read_resumed(spark, args.output)
-        from rsmetacheck_spark.operators.metrics import (
-            lineage_table,
-            rule_metrics_table,
+        metrics, _lineage, totals = pipeline.write_tail(
+            read_resumed(spark, args.output), args.output, snapshot,
+            args.pitfalls_output,
         )
-        metrics = rule_metrics_table(pages_out)
-        write_table(metrics, os.path.join(args.output, "metrics"))
-        write_table(lineage_table(pages_out, snapshot), os.path.join(args.output, "lineage"))
     else:
-        res = materialize(
+        # looked up on the module at call time: wrappers of
+        # pipeline.materialize (the benchmark's counter check) see this call
+        res = pipeline.materialize(
             spark, pages, args.output, input_snapshot=snapshot,
-            text_input=args.skip_extract,
+            text_input=args.skip_extract, reports_path=args.pitfalls_output,
         )
-        pages_out, metrics = res.pages_out, res.metrics
-
-    write_table(host_metrics_table(pages_out), os.path.join(args.output, "host_metrics"))
-    write_table(
-        per_doc_reports(pages_out),
-        args.pitfalls_output or os.path.join(args.output, "reports"),
-        partition_by=("bucket",),
-    )
-    total = pages_out.count()
-    kept = pages_out.filter("keep").count()
-    summary = summary_report(metrics, total, kept)
+        metrics, totals = res.metrics, res.observed
+    summary = summary_report(metrics, totals["n_docs"], totals["n_keep"])
     analysis_path = args.analysis_output or os.path.join(
         args.output, "analysis_results.json"
     )

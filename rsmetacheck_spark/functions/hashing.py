@@ -21,7 +21,6 @@ NUM_HASHES = 128    # minhash permutations (production-scale: 128/16 bands
 NUM_BANDS = 16      # -> 8 rows/band, LSH threshold (1/16)^(1/8) ~= 0.71)
 ROWS_PER_BAND = NUM_HASHES // NUM_BANDS
 SHINGLE_N = 3       # word-shingle width
-SIMHASH_BITS = 64   # first 16 hex chars of md5
 BAND_CAP = 100      # hot-band guard: a band bucket holding > BAND_CAP docs
                     # (a viral template) would go quadratic inside one key;
                     # such buckets are dropped, like dd03's DF<=100 guard
@@ -51,53 +50,4 @@ def shingles(col_name: str, n: int = SHINGLE_N) -> Column:
     return F.expr(
         f"CASE WHEN size({col_name}) >= {n} THEN array_distinct({expr})"
         f" ELSE CAST(array() AS array<string>) END"
-    )
-
-
-def minhash_sig(shingle_col: str, num_hashes: int = NUM_HASHES) -> Column:
-    """array<string> minhash signature: sig[i] = min(md5(i || '|' || s))."""
-    return F.expr(
-        f"transform(sequence(0, {num_hashes - 1}),"
-        f" i -> array_min(transform({shingle_col},"
-        f"   s -> md5(concat(cast(i as string), '|', s)))))"
-    )
-
-
-def band_keys(sig_col: str, num_bands: int = NUM_BANDS,
-              rows: int = ROWS_PER_BAND) -> Column:
-    """array<struct<band:int, key:string>> of LSH band bucket keys."""
-    return F.expr(
-        f"transform(sequence(0, {num_bands - 1}),"
-        f" b -> struct(b as band,"
-        f"   md5(concat_ws('|', slice({sig_col}, b * {rows} + 1, {rows}))) as key))"
-    )
-
-
-def simhash_hex(toks_col: str, bits: int = SIMHASH_BITS) -> Column:
-    """64-bit SimHash as a 16-char hex string, from per-token md5 bits.
-
-    Bit b of token t = (hexdigit(md5(t), b//4) >> (3 - b%4)) & 1, where
-    hexdigit is decoded via strpos over '0123456789abcdef' — portable to
-    DuckDB verbatim. Document bit = majority vote over distinct tokens.
-    """
-    # per-token 64-bit vector as array of ±1, summed over tokens, then sign
-    return F.expr(
-        f"""
-        concat_ws('', transform(sequence(0, {bits // 4 - 1}), nib ->
-          substr('0123456789abcdef',
-            1 + aggregate(sequence(0, 3), 0, (acc, bit) ->
-              acc + (case when (
-                aggregate(array_distinct({toks_col}), 0, (s, t) ->
-                  s + (case when
-                    ((strpos('0123456789abcdef',
-                       substr(md5(t), nib + 1, 1)) - 1) div
-                     (case bit when 0 then 8 when 1 then 4 when 2 then 2 else 1 end))
-                    % 2 = 1
-                  then 1 else -1 end)
-                ) > 0
-              ) then (case bit when 0 then 8 when 1 then 4 when 2 then 2 else 1 end)
-              else 0 end)
-            ), 1)
-        ))
-        """
     )

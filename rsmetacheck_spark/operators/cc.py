@@ -27,12 +27,35 @@ round deep (plan shape identical every round).
 
 from __future__ import annotations
 
+import time
 from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 CheckpointFn = Callable[[DataFrame, str], DataFrame]
+
+# How long a round waits, after its checkpoint returns, for the listener
+# that fills the round's Observation. The listener runs on Spark's event
+# bus, normally milliseconds after the write; a checkpoint fn that served
+# the tag without running a write never fills it.
+OBSERVE_TIMEOUT_S = 60.0
+
+
+def _observed(obs, tag: str) -> dict:
+    """`obs.get` with a bounded wait: RuntimeError naming `tag` if no
+    action filled the Observation within OBSERVE_TIMEOUT_S."""
+    deadline = time.monotonic() + OBSERVE_TIMEOUT_S
+    filled = obs._jo.future()  # completed by the listener
+    while not filled.isCompleted():
+        time.sleep(0.005)
+        if time.monotonic() > deadline:
+            raise RuntimeError(
+                f"checkpoint {tag!r} returned but no write reported its "
+                "observed stats: was the tag served from a cache? Per-round "
+                "tags must be written on every call."
+            )
+    return obs.get
 
 
 def largestar_components(
@@ -62,7 +85,7 @@ def largestar_components(
         (no duplicate self-cancellation). Only safe for tags the
         checkpoint fn NEVER serves from a session cache (the per-round
         tags): a cache hit would skip the write and leave obs.get
-        blocking forever."""
+        blocking forever — `_observed` bounds that wait and names the tag."""
         obs = Observation(tag)
         out = checkpoint(
             e.observe(
@@ -72,7 +95,8 @@ def largestar_components(
             ),
             tag,
         )
-        return out, (obs.get["n"], obs.get["h"])
+        stats = _observed(obs, tag)
+        return out, (stats["n"], stats["h"])
 
     # cc_edges may be served from a keyed session cache by the caller's
     # checkpoint fn, so its stats stay a separate (one-off) action

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import thresholds as TH
+from . import rules as R
 
 
 def rule_metrics_table(pages_out: DataFrame) -> DataFrame:
@@ -25,17 +26,15 @@ def rule_metrics_table(pages_out: DataFrame) -> DataFrame:
     393-396), so consumers can rely on a fixed 15-row table. The hit
     aggregation right-joins a literal rule list (broadcast, 15 rows)."""
     spark = pages_out.sparkSession
-    all_rules = spark.createDataFrame(
-        [(rule,) for rule, _sev in TH.RULES], "rule string"
-    )
-    total = pages_out.select(F.count("*").alias("total_docs"))
+    rules = ", ".join(R.lit(rule) for rule, _sev in TH.RULES)
+    all_rules = spark.range(1).selectExpr(f"explode(array({rules})) AS rule")
+    total = pages_out.selectExpr("count(1) AS total_docs")
     # A3 fidelity (detect_pitfalls_main.py:346-351): a hit counts once per
     # TARGET LANGUAGE of the document (multi-valued explode over the
     # langid top-2 list when present), while `hits` stays doc-level —
     # exactly the reference's two counters
     langs = (
-        F.col("lang_top2") if "lang_top2" in pages_out.columns
-        else F.array("lang_pred")
+        "lang_top2" if "lang_top2" in pages_out.columns else "array(lang_pred)"
     )
     # ONE pass over the sink for BOTH grains (the doc-level `hits` and
     # the per-language counts used to need two scans + two explodes):
@@ -45,73 +44,48 @@ def rule_metrics_table(pages_out: DataFrame) -> DataFrame:
     # non-null lang rows — identical numbers, half the sink scans.
     hit_findings = (
         pages_out
-        .select(langs.alias("langs"), F.explode("findings").alias("f"))
-        .filter(F.col("f.hit"))
-        .select(
-            F.col("f.rule").alias("rule"),
-            F.posexplode_outer("langs").alias("pos", "lang"),
-        )
+        .selectExpr(f"{langs} AS langs", "explode(findings) AS f")
+        .filter("f.hit")
+        .selectExpr("f.rule AS rule", "posexplode_outer(langs) AS (pos, lang)")
     )
-    per_rule_lang = (
-        hit_findings
-        .groupBy("rule", "lang")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(
-                F.when(F.coalesce(F.col("pos"), F.lit(0)) == 0, 1).otherwise(0)
-            ).alias("nf"),
-        )
+    per_rule_lang = hit_findings.groupBy("rule", "lang").agg(
+        F.expr("count(1) AS n"),
+        F.expr("sum(CASE WHEN coalesce(pos, 0) = 0 THEN 1 ELSE 0 END) AS nf"),
     )
-    agg = (
-        per_rule_lang
-        .groupBy("rule")
-        .agg(
-            F.map_from_entries(
-                F.sort_array(
-                    F.collect_list(
-                        F.when(
-                            F.col("lang").isNotNull(), F.struct("lang", "n")
-                        )
-                    )
-                )
-            ).alias("lang_counts"),
-            F.sum("nf").alias("hits"),
-        )
+    agg = per_rule_lang.groupBy("rule").agg(
+        F.expr(
+            "map_from_entries(sort_array(collect_list("
+            "CASE WHEN lang IS NOT NULL THEN struct(lang, n) END)))"
+            " AS lang_counts"
+        ),
+        F.expr("sum(nf) AS hits"),
     )
-    empty_map = F.map_from_entries(
-        F.array().cast("array<struct<lang:string,n:bigint>>")
-    )
+    empty_map = "map_from_entries(CAST(array() AS array<struct<lang:string,n:bigint>>))"
     return (
         all_rules
         .join(F.broadcast(agg), "rule", "left")
         .crossJoin(F.broadcast(total))
-        .select(
+        .selectExpr(
             "rule",
-            F.coalesce("hits", F.lit(0)).alias("hits"),
+            "coalesce(hits, 0) AS hits",
             # greatest(total, 1): a zero-row corpus must yield pct=0.0,
             # not an ANSI DIVIDE_BY_ZERO that aborts the metrics write
             # (found by the empty-input observed-counters probe)
-            F.round(
-                F.coalesce("hits", F.lit(0)) * 100.0
-                / F.greatest(F.col("total_docs"), F.lit(1)),
-                2,
-            ).alias("pct"),
-            F.coalesce("lang_counts", empty_map).alias("lang_counts"),
+            "round(coalesce(hits, 0) * 100.0D / greatest(total_docs, 1), 2)"
+            " AS pct",
+            f"coalesce(lang_counts, {empty_map}) AS lang_counts",
         )
     )
 
 
-def _rule_hit_sums() -> F.Column:
-    entries = [
-        F.struct(
-            F.lit(rule).alias("key"),
-            F.sum(
-                F.element_at("findings", i + 1)["hit"].cast("long")
-            ).alias("value"),
-        )
+def _rule_hit_sums() -> str:
+    """SQL map rule -> hit count; the findings array is in RULES order."""
+    entries = ", ".join(
+        f"named_struct('key', {R.lit(rule)}, 'value',"
+        f" sum(CAST(element_at(findings, {i + 1}).hit AS BIGINT)))"
         for i, (rule, _sev) in enumerate(TH.RULES)
-    ]
-    return F.map_from_entries(F.array(*entries))
+    )
+    return f"map_from_entries(array({entries}))"
 
 
 def host_metrics_table(pages_out: DataFrame) -> DataFrame:
@@ -122,20 +96,22 @@ def host_metrics_table(pages_out: DataFrame) -> DataFrame:
     fan out across N_SALT reducers; phase 2 combines the <= N_SALT partial
     rows per host. AQE skew handling stays on as backstop; this makes the
     fan-out deterministic rather than reactive."""
-    host = F.regexp_extract("url", r"^https?://([^/]+)", 1)
-    salt = F.pmod(F.xxhash64("url"), F.lit(TH.N_SALT))
     phase1 = (
         pages_out
-        .groupBy(host.alias("host"), salt.alias("__salt"))
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("keep").cast("long")).alias("k"),
+        .selectExpr(
+            f"{R.url_host('url')} AS host",
+            f"pmod(xxhash64(url), {TH.N_SALT}) AS __salt",
+            "keep",
         )
+        .groupBy("host", "__salt")
+        .agg(F.expr("count(1) AS n"), F.expr("sum(CAST(keep AS BIGINT)) AS k"))
     )
     return (
         phase1.groupBy("host")
-        .agg(F.sum("n").alias("n_docs"), F.sum("k").alias("n_kept"))
-        .withColumn("keep_pct", F.round(100.0 * F.col("n_kept") / F.col("n_docs"), 2))
+        .agg(F.expr("sum(n) AS n_docs"), F.expr("sum(k) AS n_kept"))
+        .selectExpr(
+            "*", "round(100.0D * n_kept / n_docs, 2) AS keep_pct"
+        )
     )
 
 
@@ -151,7 +127,7 @@ def lineage_table(pages_out: DataFrame, input_snapshot: str) -> DataFrame:
         .agg(
             F.count("*").alias("rows_in"),
             F.sum(F.col("keep").cast("long")).alias("rows_kept"),
-            _rule_hit_sums().alias("rule_hits"),
+            F.expr(_rule_hit_sums()).alias("rule_hits"),
         )
         .withColumn("input_snapshot", F.lit(input_snapshot))
     )

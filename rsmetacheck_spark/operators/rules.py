@@ -2,10 +2,16 @@
 
 Split of labor (SURVEY.md §2.9): token-level stats arrive from the fused
 Arrow stage (functions/pytext.py explains why); everything HERE is a native
-Column expression — threshold compares, substring probes, URL/host and
-timestamp rules — all inside whole-stage codegen. Each rule returns
-(metric, hit); registry order mirrors the reference's fixed detector list
+expression — threshold compares, substring probes, URL/host and timestamp
+rules — all inside whole-stage codegen. Each rule returns (metric, hit);
+registry order mirrors the reference's fixed detector list
 (detect_pitfalls_main.py:281-311) since rule order is part of output parity.
+
+The expressions are Spark SQL text, rendered from the thresholds registry
+and parsed once per projection (`selectExpr` / `F.expr`). A Column-API tree
+costs one Py4J round trip per node — about 3,900 for the 15-rule findings
+array alone — which made plan building a large share of a small job's fixed
+cost. Threshold values enter the text only through `lit`.
 
 Reference shapes implemented (SURVEY.md §2.3):
  - doc length      <- P010's line-count check (p010.py:73)
@@ -19,75 +25,90 @@ Reference shapes implemented (SURVEY.md §2.3):
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+import math
 
 from .. import thresholds as TH
 
-
-def url_host(url: Column) -> Column:
-    return F.regexp_extract(url, r"^https?://([^/]+)", 1)
+HOST_RE = r"^https?://([^/]+)"
 
 
-def boilerplate_hit(text: Column, lowered: bool = False) -> Column:
-    """`lowered=True` means `text` is ALREADY lowercased (a named
-    column): without it, Catalyst inlines `lower(text)` into every
-    phrase's instr, lowercasing the full text |PHRASES| times per row —
-    measured seconds per million docs in the verdict stage."""
-    low = text if lowered else F.lower(text)
-    hit = F.lit(False)
-    for p in TH.BOILERPLATE_PHRASES:
-        hit = hit | (F.instr(low, p) > 0)
-    return hit
+def lit(value) -> str:
+    """A Python threshold value as a Spark SQL literal. Floats carry the
+    `D` suffix: a bare `0.3` parses as DECIMAL, not DOUBLE. Strings escape
+    backslash and quote (the parser unescapes string literals)."""
+    if isinstance(value, bool):
+        return "true" if value else "false"
+    if isinstance(value, int):
+        return str(value)
+    if isinstance(value, float):
+        if math.isfinite(value):
+            return f"{value!r}D"
+        name = "NaN" if math.isnan(value) else (
+            "Infinity" if value > 0 else "-Infinity")
+        return f"CAST('{name}' AS DOUBLE)"
+    if isinstance(value, str):
+        return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    raise TypeError(f"no SQL literal for {type(value).__name__}: {value!r}")
 
 
-def rule_metrics(c: dict[str, Column]) -> dict[str, tuple[Column, Column]]:
-    """rule_code -> (metric, hit). `c` maps column name -> Column for:
-    url, warc_ts, extracted_text, lang_pred, log_ppl, n_pii_*, and the
-    pytext stats (n_words, sym_ratio, stop_frac, mean_word_len,
-    dup_ngram_frac, bullet_frac, ellipsis_frac).
-    """
-    nw = c["n_words"]
-    # prefer a caller-materialized lowered-text column (verdicts.py names
-    # one) so the lowercase pass runs once per row, not once per phrase
-    if "__lowtext" in c:
-        boiler = boilerplate_hit(c["__lowtext"], lowered=True)
-    else:
-        boiler = boilerplate_hit(c["extracted_text"])
+def in_list(expr: str, values) -> str:
+    """`expr IN (values)`; an empty list matches nothing."""
+    if not values:
+        return "false"
+    return f"({expr}) IN ({', '.join(lit(v) for v in values)})"
+
+
+def url_host(url: str) -> str:
+    return f"regexp_extract({url}, {lit(HOST_RE)}, 1)"
+
+
+def rule_sql() -> dict[str, tuple[str, str]]:
+    """rule_code -> (metric, hit) SQL over the model-stage columns: url,
+    warc_ts, lang_pred, log_ppl, n_pii_*, the pytext stats (n_words,
+    sym_ratio, stop_frac, mean_word_len, dup_ngram_frac, bullet_frac,
+    ellipsis_frac) and `__lowtext`, the lowercased extracted text that the
+    caller names once per row (verdicts.py)."""
+    boiler = " OR ".join(
+        f"instr(__lowtext, {lit(p)}) > 0" for p in TH.BOILERPLATE_PHRASES
+    ) or "false"
+
+    def above(col: str, limit) -> tuple[str, str]:
+        return col, f"{col} > {lit(limit)}"
+
+    def pii(col: str) -> tuple[str, str]:
+        return f"CAST({col} AS DOUBLE)", f"{col} > 0"
+
     return {
         "R001_doc_length": (
-            nw.cast("double"), (nw < TH.MIN_WORDS) | (nw > TH.MAX_WORDS)
+            "CAST(n_words AS DOUBLE)",
+            f"n_words < {lit(TH.MIN_WORDS)} OR n_words > {lit(TH.MAX_WORDS)}",
         ),
-        "R002_symbol_ratio": (c["sym_ratio"], c["sym_ratio"] > TH.MAX_SYMBOL_RATIO),
+        "R002_symbol_ratio": above("sym_ratio", TH.MAX_SYMBOL_RATIO),
         "R003_stopword_fraction": (
-            c["stop_frac"], c["stop_frac"] < TH.MIN_STOPWORD_FRAC
+            "stop_frac", f"stop_frac < {lit(TH.MIN_STOPWORD_FRAC)}"
         ),
         "R004_mean_word_length": (
-            c["mean_word_len"],
-            (c["mean_word_len"] < TH.MIN_MEAN_WORD_LEN)
-            | (c["mean_word_len"] > TH.MAX_MEAN_WORD_LEN),
+            "mean_word_len",
+            f"mean_word_len < {lit(TH.MIN_MEAN_WORD_LEN)}"
+            f" OR mean_word_len > {lit(TH.MAX_MEAN_WORD_LEN)}",
         ),
-        "R005_dup_ngram_fraction": (
-            c["dup_ngram_frac"], c["dup_ngram_frac"] > TH.MAX_DUP_NGRAM_FRAC
-        ),
+        "R005_dup_ngram_fraction": above("dup_ngram_frac", TH.MAX_DUP_NGRAM_FRAC),
         "R006_boilerplate_phrase": (
-            F.when(boiler, 1.0).otherwise(0.0), boiler
+            f"CASE WHEN {boiler} THEN 1.0D ELSE 0.0D END", boiler
         ),
-        "R007_bullet_ratio": (
-            c["bullet_frac"], c["bullet_frac"] > TH.MAX_BULLET_LINE_FRAC
-        ),
-        "R008_ellipsis_ratio": (
-            c["ellipsis_frac"], c["ellipsis_frac"] > TH.MAX_ELLIPSIS_LINE_FRAC
-        ),
-        "R009_langid": (F.lit(0.0), ~c["lang_pred"].isin(*TH.KEEP_LANGS)),
-        "R010_perplexity": (c["log_ppl"], c["log_ppl"] > TH.MAX_LOG_PPL),
-        "R011_pii_email": (c["n_pii_email"].cast("double"), c["n_pii_email"] > 0),
-        "R012_pii_phone": (c["n_pii_phone"].cast("double"), c["n_pii_phone"] > 0),
-        "R013_pii_id": (c["n_pii_id"].cast("double"), c["n_pii_id"] > 0),
+        "R007_bullet_ratio": above("bullet_frac", TH.MAX_BULLET_LINE_FRAC),
+        "R008_ellipsis_ratio": above("ellipsis_frac", TH.MAX_ELLIPSIS_LINE_FRAC),
+        "R009_langid": ("0.0D", f"NOT ({in_list('lang_pred', TH.KEEP_LANGS)})"),
+        "R010_perplexity": above("log_ppl", TH.MAX_LOG_PPL),
+        "R011_pii_email": pii("n_pii_email"),
+        "R012_pii_phone": pii("n_pii_phone"),
+        "R013_pii_id": pii("n_pii_id"),
         "R014_host_blocklist": (
-            F.lit(0.0), url_host(c["url"]).isin(*TH.HOST_BLOCKLIST)
+            "0.0D", in_list(url_host("url"), TH.HOST_BLOCKLIST)
         ),
         "R015_freshness": (
-            F.lit(0.0), c["warc_ts"] < F.lit(TH.FRESHNESS_CUTOFF).cast("timestamp")
+            "0.0D",
+            f"warc_ts < CAST({lit(TH.FRESHNESS_CUTOFF)} AS TIMESTAMP)",
         ),
     }
+

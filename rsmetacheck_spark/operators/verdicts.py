@@ -6,16 +6,16 @@ evidence>> — the Spark analog of the reference's per-rule verdict dicts
 `keep` mirrors the any-issue reduce gating JSON-LD emission
 (detect_pitfalls_main.py:360-366): keep = no drop-severity hit.
 
-Plan shape: metric/hit expressions are materialized as NAMED columns first,
-and the findings structs reference them as attribute refs — CollapseProject
-will not re-inline a non-cheap expression referenced multiple times, so
-each metric is computed exactly once per row.
+Plan shape: three projections, each one `selectExpr` over SQL text from
+rules.py. The lowered text and the metric/hit expressions are materialized
+as NAMED columns first, and later expressions reference them as attribute
+refs — CollapseProject will not re-inline a non-cheap expression referenced
+multiple times, so each is computed exactly once per row.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .. import thresholds as TH
 from . import rules as R
@@ -27,59 +27,44 @@ FINDING_SCHEMA = (
 
 def with_findings(df: DataFrame) -> DataFrame:
     """Expects model-stage columns; adds findings + keep."""
-    cols = {name: F.col(name) for name in df.columns}
+    base = [f"`{c}`" for c in df.columns]
     # the model stage emits extracted_text SPARSELY (null == identical to
-    # scrubbed_text); rules that read the raw text get the restored value
-    lowtext = None
-    if "extracted_text" in cols and "scrubbed_text" in cols:
-        cols["extracted_text"] = F.coalesce("extracted_text", "scrubbed_text")
-        # boilerplate scans a LOWERED copy of the text per phrase; name
-        # it once (attribute refs are not re-inlined, see module doc) so
-        # the row pays one lowercase pass instead of |PHRASES|
-        lowtext = F.lower(cols["extracted_text"])
-        df = df.withColumn("__lowtext", lowtext)
-        cols["__lowtext"] = F.col("__lowtext")
-    metrics = R.rule_metrics(cols)
+    # scrubbed_text); boilerplate reads the restored value. It scans a
+    # LOWERED copy per phrase: naming it once makes the row pay one
+    # lowercase pass instead of |PHRASES|
+    text = (
+        "coalesce(extracted_text, scrubbed_text)"
+        if "scrubbed_text" in df.columns else "extracted_text"
+    )
+    df = df.selectExpr("*", f"lower({text}) AS __lowtext")
 
-    metric_cols, hit_cols = {}, {}
-    for rule, _sev in TH.RULES:
-        metric, hit = metrics[rule]
-        metric_cols[f"__m_{rule}"] = F.coalesce(metric.cast("double"), F.lit(0.0))
-        hit_cols[f"__h_{rule}"] = F.coalesce(hit, F.lit(False))
-    df = df.withColumns({**metric_cols, **hit_cols})
+    rules = R.rule_sql()
+    helpers = []
+    for i, (rule, _sev) in enumerate(TH.RULES):
+        metric, hit = rules[rule]
+        helpers += [
+            f"coalesce(CAST(({metric}) AS DOUBLE), 0.0D) AS __m{i}",
+            f"coalesce(({hit}), false) AS __h{i}",
+        ]
+    df = df.selectExpr("*", *helpers)
 
     # per-rule evidence template (the reference renders a distinct template
     # per detector, json_ld_utils.py:144-333): the rule's description from
-    # the static lookup is baked in as a literal, so each struct's evidence
-    # is a one-format_string codegen expression. Evidence text is rendered
+    # the static lookup is baked in as a literal. Evidence text is rendered
     # ONLY for hits — the reference renders evidence only for flagged
     # verdicts (json_ld_utils.py:447-493), and null evidence for the ~13
     # non-hit rules per doc saves ~1 KB/row at the sink.
-    finding_structs = [
-        F.struct(
-            F.lit(rule).alias("rule"),
-            F.col(f"__h_{rule}").alias("hit"),
-            F.lit(severity).alias("severity"),
-            F.col(f"__m_{rule}").alias("metric"),
-            F.when(
-                F.col(f"__h_{rule}"),
-                F.format_string(
-                    f"%s: {TH.RULE_INFO[rule][1]} (metric=%s)",
-                    F.lit(rule), F.col(f"__m_{rule}").cast("string"),
-                ),
-            ).alias("evidence"),
-        )
-        for rule, severity in TH.RULES
-    ]
-    drop_hits = [
-        F.col(f"__h_{rule}") for rule, sev in TH.RULES if sev == TH.DROP
-    ]
-    dropped = drop_hits[0]
-    for h in drop_hits[1:]:
-        dropped = dropped | h
-    df = df.withColumn("findings", F.array(*finding_structs))
-    df = df.withColumn("keep", ~dropped)
-    drop_helpers = list(metric_cols.keys()) + list(hit_cols.keys())
-    if lowtext is not None:
-        drop_helpers.append("__lowtext")
-    return df.drop(*drop_helpers)
+    structs = ", ".join(
+        f"named_struct('rule', {R.lit(rule)}, 'hit', __h{i},"
+        f" 'severity', {R.lit(sev)}, 'metric', __m{i},"
+        f" 'evidence', CASE WHEN __h{i} THEN concat("
+        f"{R.lit(f'{rule}: {TH.RULE_INFO[rule][1]} (metric=')},"
+        f" CAST(__m{i} AS STRING), ')') END)"
+        for i, (rule, sev) in enumerate(TH.RULES)
+    )
+    dropped = " OR ".join(
+        f"__h{i}" for i, (_r, sev) in enumerate(TH.RULES) if sev == TH.DROP
+    ) or "false"
+    return df.selectExpr(
+        *base, f"array({structs}) AS findings", f"NOT ({dropped}) AS keep"
+    )

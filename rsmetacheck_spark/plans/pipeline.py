@@ -4,15 +4,23 @@ detect_pitfalls_main.py:41-412, recast as one lazy DataFrame graph):
     pages(url, warc_ts, html[, text, lang])
       -> fused model stage (extract + langid + perplexity + scrub + token
          stats; ONE Arrow round trip, per-executor model singletons)
-      -> native-expr rules -> findings array + keep gate
+      -> native-expr rules (SQL text) -> findings array + keep gate
       -> materialize pages_out (partitioned by url-hash bucket)
-      -> metrics / lineage FROM THE WRITTEN TABLE
+      -> write_tail: metrics / lineage / host_metrics / per-doc reports
+         FROM THE WRITTEN TABLE, in one concurrent round
 
-Why metrics read the sink instead of re-aggregating the live plan: the
+Why the tail reads the sink instead of re-aggregating the live plan: the
 model stage is the expensive part; aggregating the written table scans only
 the narrow columns (column pruning at the parquet scan) and never
 recomputes models. The bucket column doubles as the checkpoint/resume unit
 (streaming/incremental.py).
+
+Fixed cost per run: at bench scale most of a run is per-job and per-plan
+overhead, not data work. So the rule expressions are SQL text (one parse
+per projection, not one Py4J call per Column node), the four tail tables
+are written concurrently (the scheduler interleaves their small jobs), and
+the summary totals are Observation counters collected during writes (no
+count() jobs).
 
 Scale notes (the 100 TB story):
  - model stage: embarrassingly parallel, zero shuffle; partition sizing is
@@ -27,14 +35,16 @@ Scale notes (the 100 TB story):
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import thresholds as TH
-from ..operators.metrics import lineage_table, rule_metrics_table
+from ..operators.metrics import host_metrics_table, lineage_table, rule_metrics_table
 from ..operators.model_stage import apply_model_stage
+from ..operators.report import per_doc_reports
 from ..operators.verdicts import with_findings
 from ..sources.tables import write_table
 
@@ -180,14 +190,70 @@ def run_pipeline(pages: DataFrame, input_snapshot: str = "synthetic") -> Pipelin
     )
 
 
+def write_tail(
+    pages_out: DataFrame,
+    out_dir: str,
+    input_snapshot: str,
+    reports_path: str | None = None,
+) -> tuple[DataFrame, DataFrame, dict]:
+    """Write the four tables derived from the sink — metrics, lineage,
+    host_metrics and the per-doc reports (default `<out_dir>/reports`) —
+    in ONE concurrent round. Each is a few small jobs whose cost is mostly
+    per-job overhead; submitted from one thread pool, the scheduler
+    interleaves their tasks instead of running them back to back. The pool
+    threads inherit the caller's job group and description.
+
+    -> (metrics, lineage) read back from their tables, and the sink totals
+    {n_docs, n_keep} observed during the lineage write (no count job)."""
+    from pyspark.sql import Observation
+    from pyspark.util import inheritable_thread_target
+
+    spark = pages_out.sparkSession
+    # the totals are sums over the lineage rows (one per bucket), observed
+    # at the top of its write: an Observation under the lineage aggregate
+    # is dropped when AQE replaces an empty shuffle stage
+    obs = Observation("tail_totals")
+    tables = [
+        (lambda: rule_metrics_table(pages_out),
+         os.path.join(out_dir, "metrics"), ()),
+        (lambda: lineage_table(pages_out, input_snapshot).observe(
+            obs,
+            F.sum("rows_in").alias("n_docs"),
+            F.sum("rows_kept").alias("n_keep"),
+        ), os.path.join(out_dir, "lineage"), ()),
+        (lambda: host_metrics_table(pages_out),
+         os.path.join(out_dir, "host_metrics"), ()),
+        (lambda: per_doc_reports(pages_out),
+         reports_path or os.path.join(out_dir, "reports"), ("bucket",)),
+    ]
+
+    # plans are built in the pool too: their analysis overlaps
+    @inheritable_thread_target(spark)
+    def write(build, path, partition_by):
+        df = build()
+        write_table(df, path, partition_by=partition_by)
+        return df.schema
+
+    with ThreadPoolExecutor(len(tables)) as ex:
+        futures = [ex.submit(write, *t) for t in tables]
+        schemas = [f.result() for f in futures]
+    metrics, lineage = (
+        spark.read.schema(schemas[i]).parquet(tables[i][1]) for i in (0, 1)
+    )
+    totals = {k: (v if v is not None else 0) for k, v in obs.get.items()}
+    return metrics, lineage, totals
+
+
 def materialize(
     spark: SparkSession,
     pages: DataFrame,
     out_dir: str,
     input_snapshot: str = "synthetic",
     text_input: bool = False,
+    reports_path: str | None = None,
 ) -> PipelineResult:
-    """Write pages_out once; derive metrics/lineage from the written table."""
+    """Write pages_out once, then derive every other table from the
+    written sink in one concurrent round (`write_tail`)."""
     pages_path = os.path.join(out_dir, "pages_out")
     # Size-bound parallelism: at 100 TB the scan naturally yields
     # maxPartitionBytes-bounded partitions; a small test/bench input can
@@ -209,10 +275,14 @@ def materialize(
     # Cluster by bucket before the partitioned write: otherwise every write
     # task emits a file per bucket (tasks × buckets tiny files — observed
     # 2048 files for a 4k-doc bench, dominating both the write and every
-    # downstream scan). One shuffle of the verdict rows -> one file per
-    # bucket. The model stage still parallelizes at the scan partitioning,
-    # upstream of this exchange.
-    clustered = encode_for_sink(plan).repartition(TH.N_BUCKETS, "bucket")
+    # downstream scan). Hash-clustering on the bucket puts each bucket in
+    # exactly one task -> one file per bucket. One task per core, not per
+    # bucket: murmur3 leaves 14 of 32 partitions empty for buckets 0..31,
+    # and every write task pays a fixed cost. The model stage still
+    # parallelizes at the scan partitioning, upstream of this exchange.
+    clustered = encode_for_sink(plan).repartition(
+        min(TH.N_BUCKETS, target), "bucket"
+    )
     # Global counters ride the WRITE action itself (AggregatingAccumulator
     # under CollectMetrics): at 100 TB this is n_docs/n_keep/n_errors for
     # free — no separate count job, no second scan of the sink. The
@@ -235,21 +305,13 @@ def materialize(
     # Read back with the plan's schema: an empty input writes no data files
     # and schema inference would fail (probe-found edge case).
     pages_out = decode_from_sink(spark.read.schema(plan.schema).parquet(pages_path))
-    metrics = rule_metrics_table(pages_out)
-    lineage = lineage_table(pages_out, input_snapshot)
-    # Two independent small aggregation jobs over the sink — submit them
-    # concurrently so the scheduler interleaves their tasks (halves the
-    # serial tail of the run).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(2) as ex:
-        fm = ex.submit(write_table, metrics, os.path.join(out_dir, "metrics"))
-        fl = ex.submit(write_table, lineage, os.path.join(out_dir, "lineage"))
-        fm.result(), fl.result()
+    metrics, lineage, _totals = write_tail(
+        pages_out, out_dir, input_snapshot, reports_path
+    )
     return PipelineResult(
         pages_out=pages_out,
-        metrics=spark.read.schema(metrics.schema).parquet(os.path.join(out_dir, "metrics")),
-        lineage=spark.read.schema(lineage.schema).parquet(os.path.join(out_dir, "lineage")),
+        metrics=metrics,
+        lineage=lineage,
         snapshot=snapshot,
         observed=observed,
     )

@@ -102,3 +102,38 @@ def test_random_graph_matches_networkx_style_bfs(spark):
 
     got = _labels(spark, pairs)
     assert got == truth
+
+
+def test_cached_round_tag_raises_instead_of_hanging(spark, monkeypatch):
+    """A checkpoint fn that serves a per-round tag from its cache runs no
+    write, so nothing fills that round's Observation. The round must fail
+    with an error naming the tag, not block forever on `Observation.get`.
+    The hard wall-clock bound is a daemon thread joined with a timeout
+    (no pytest-timeout here)."""
+    import threading
+
+    from rsmetacheck_spark.operators import cc
+
+    monkeypatch.setattr(cc, "OBSERVE_TIMEOUT_S", 1.0)
+    cache = {}
+
+    def caching_ckpt(df, tag):
+        if tag not in cache:
+            cache[tag] = df.localCheckpoint(eager=True)
+        return cache[tag]
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    largestar_components(pairs, caching_ckpt)  # fills the cache
+    box = {}
+
+    def second_run():
+        try:
+            largestar_components(pairs, caching_ckpt)
+        except RuntimeError as exc:
+            box["error"] = str(exc)
+
+    t = threading.Thread(target=second_run, daemon=True)
+    t.start()
+    t.join(timeout=60)
+    assert not t.is_alive(), "largestar_components blocked on a cached tag"
+    assert "cc_star_0" in box.get("error", ""), box

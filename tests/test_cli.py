@@ -11,25 +11,6 @@ import pytest
 
 import main as cli_main
 from rsmetacheck_spark import synth
-from rsmetacheck_spark import thresholds as TH
-
-
-@pytest.fixture()
-def th_restore():
-    saved = {
-        n: getattr(TH, n)
-        for n in dir(TH)
-        if n.isupper() and not n.startswith("_")
-    }
-    yield
-    for n, v in saved.items():
-        setattr(TH, n, v)
-    # _apply_threshold_overrides exports into os.environ for executor
-    # imports; leaving it set leaks the override into every later
-    # get_spark / subprocess in this pytest process (an
-    # EXECUTOR_CONSUMED name would trip session.py's fresh-session
-    # RuntimeError in an unrelated test)
-    os.environ.pop("RSMC_THRESHOLD_OVERRIDES", None)
 
 
 @pytest.fixture(scope="module")
@@ -199,3 +180,74 @@ def test_resume_with_skip_extract(spark, pages_parquet, th_restore):
     assert resumed.count() == res.pages_out.count()
     assert (resumed.filter("keep").count()
             == res.pages_out.filter("keep").count())
+
+
+# Spark jobs one fresh CLI run submits on the 300-doc fixture: the read's
+# schema job, the model stage + bucket write, the concurrent tail's jobs and
+# the summary's collect of the metrics table. The summary's totals are
+# observed counters, not count() jobs. (On the 4,000-page benchmark input a
+# run went from 21 jobs to 17.)
+FRESH_RUN_JOBS = 16
+
+
+def _run_in_job_group(spark, group, argv):
+    """main.main under a job group -> the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        cli_main.main(argv)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _sink_totals(spark, out):
+    sink = spark.read.parquet(os.path.join(out, "pages_out"))
+    return sink.count(), sink.filter("keep").count()
+
+
+def test_cli_totals_are_observed_and_job_budget(
+    spark, pages_parquet, th_restore, monkeypatch
+):
+    """Fresh path: the summary's total_docs/kept equal the sink's counts
+    and the `sink_counters` Observation, and the run stays within its
+    pinned job count. --resume path: the totals, observed during the tail's
+    lineage write, equal the sink's counts."""
+    import uuid
+
+    from rsmetacheck_spark.plans import pipeline
+    from rsmetacheck_spark.streaming.incremental import resume_materialize
+
+    box = {}
+    orig = pipeline.materialize
+
+    def spy(*a, **kw):
+        res = orig(*a, **kw)
+        box["observed"] = res.observed
+        return res
+
+    monkeypatch.setattr(pipeline, "materialize", spy)
+    out = tempfile.mkdtemp(prefix="cli_jobs_")
+    n_jobs = _run_in_job_group(
+        spark, f"cli_fresh_{uuid.uuid4().hex}",
+        ["--input", pages_parquet, "--output", out, "--cpus", "8"],
+    )
+    summary = json.load(open(os.path.join(out, "analysis_results.json")))
+    totals = (summary["total_docs"], summary["kept"])
+    assert totals == _sink_totals(spark, out)
+    assert totals == (box["observed"]["n_docs"], box["observed"]["n_keep"])
+    assert n_jobs == FRESH_RUN_JOBS, n_jobs
+
+    # a killed run: half the bucket groups done, then the CLI resumes it
+    out = tempfile.mkdtemp(prefix="cli_resume_")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        resume_materialize(
+            spark, pipeline.read_pages(spark, pages_parquet), out,
+            fail_after_groups=2,
+        )
+    cli_main.main(["--input", pages_parquet, "--output", out, "--cpus", "8",
+                   "--resume"])
+    summary = json.load(open(os.path.join(out, "analysis_results.json")))
+    assert (summary["total_docs"], summary["kept"]) == _sink_totals(spark, out)
+    assert summary["total_docs"] == 300
