@@ -48,24 +48,17 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def _tok_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, tok, c): per-doc token counts, checkpointed once per
-    session — dd12 consumes the counts (weighted Jaccard), dd15 the same
-    column as tf weights, dd13 the key set (distinct tokens). One
-    tokenize+explode+groupBy pass instead of three."""
-    d = _docs_par(spark, sf_dir).select("doc_id", "text")
-    toks = _TOKS_DUCK.format(c="text")
-    # DuckDB-in-mapInArrow (guide §4.2, the _shingle_mat pattern): each
-    # input row is ONE whole document, so a per-batch GROUP BY
-    # (doc_id, tok) is already the final per-doc count — the JVM
-    # explode + groupBy shuffled the near-unreduced exploded token rows
-    # (partial aggregation cannot combine across partitions it never
-    # sees twice). This build is map-only: zero Exchange.
-    sql = (
-        "SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS c "
-        f"FROM (SELECT doc_id, unnest({toks}) AS tok FROM _b) "
-        "GROUP BY doc_id, tok"
-    )
+def _duck_map(df: DataFrame, sql: str, schema: str) -> DataFrame:
+    """Run `sql` over every Arrow batch of `df` (visible to DuckDB as
+    `_b`) inside mapInArrow: the shared feeder kernel (guide §4.2: a
+    vectorized native engine per batch beats interpreted Catalyst HOF
+    lambdas). Strings stay Arrow-native end to end; an earlier
+    mapInPandas attempt was 2x slower because it materialized every
+    token as a Python object. When each input row is one whole
+    document, a per-batch GROUP BY on doc_id is already final, so the
+    feeder is map-only: zero Exchange, where the JVM explode + groupBy
+    shuffled near-unreduced exploded rows (one doc never spans two map
+    partitions, so partial aggregation had nothing to combine)."""
 
     def build(batches):
         import duckdb
@@ -78,8 +71,23 @@ def _tok_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             _b = pa.Table.from_batches([b])  # noqa: F841 (duckdb scan)
             yield from con.execute(sql).fetch_arrow_table().to_batches()
 
+    return df.mapInArrow(build, schema)
+
+
+def _tok_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, tok, c): per-doc token counts, checkpointed once per
+    session — dd12 consumes the counts (weighted Jaccard), dd15 the same
+    column as tf weights, dd13 the key set (distinct tokens). One
+    tokenize+count pass instead of three."""
+    d = _docs_par(spark, sf_dir).select("doc_id", "text")
+    toks = _TOKS_DUCK.format(c="text")
+    sql = (
+        "SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS c "
+        f"FROM (SELECT doc_id, unnest({toks}) AS tok FROM _b) "
+        "GROUP BY doc_id, tok"
+    )
     return _checkpoint(
-        d.mapInArrow(build, "doc_id long, tok string, c long"),
+        _duck_map(d, sql, "doc_id long, tok string, c long"),
         "tok_counts", key=f"tok_counts:{_sfkey(sf_dir)}",
     )
 
@@ -637,19 +645,15 @@ def _shingle_mat(spark: SparkSession, sf: str) -> DataFrame:
     signatures + Jaccard verify, dd03's inverted index is this exploded,
     dd16/dd17's per-source sets re-key it by source).
 
-    Built by handing whole Arrow batches to DuckDB inside mapInArrow
-    (guide §4.2: vectorized native engine per batch beats interpreted
-    Catalyst HOF lambdas): the zip_with shingle expression is
+    Built by `_duck_map`: the zip_with shingle expression is
     interpreted per element in the JVM, and a round-6 A/B at 10x bench
     scale measured the DuckDB builder 2x faster (5.6 s vs 10.9 s noop)
     with an identical distinct-shingle set per doc (exceptAll diff 0 —
     the SQL here IS the oracle's shingle CTE, so cross-engine shingle
-    parity is oracle-enforced). Strings stay Arrow-native end to end;
-    an earlier mapInPandas attempt was 2x SLOWER because it
-    materialized every token as a Python object. Element ORDER inside
-    one doc's array may differ from array_distinct's first-occurrence
-    order; every consumer is set-based (MIN over hashes, explode,
-    array_intersect sizes), so results are unchanged."""
+    parity is oracle-enforced). Element ORDER inside one doc's array
+    may differ from array_distinct's first-occurrence order; every
+    consumer is set-based (MIN over hashes, explode, array_intersect
+    sizes), so results are unchanged."""
     d = _docs_par(spark, sf).select("doc_id", "text")
     toks = _TOKS_DUCK.format(c="text")
     shexpr = _SHINGLES_DUCK.format(t=toks)
@@ -657,22 +661,47 @@ def _shingle_mat(spark: SparkSession, sf: str) -> DataFrame:
         f"SELECT doc_id, sh FROM (SELECT doc_id, {shexpr} AS sh FROM _b) "
         "WHERE len(sh) > 0"  # empty docs have no near-dup notion
     )
-
-    def build(batches):
-        import duckdb
-        import pyarrow as pa
-
-        con = duckdb.connect()
-        con.execute("SET threads TO 1")  # Spark owns the cores; an
-        # all-core pool per task oversubscribes 22 tasks x 32 threads
-        for b in batches:
-            _b = pa.Table.from_batches([b])  # noqa: F841 (duckdb scan)
-            yield from con.execute(sql).fetch_arrow_table().to_batches()
-
     return _checkpoint(
-        d.mapInArrow(build, "doc_id long, sh array<string>"),
+        _duck_map(d, sql, "doc_id long, sh array<string>"),
         "dd02_sh", key=f"dd02_sh:{_sfkey(sf)}",
     )
+
+
+def _minhash_mins(
+    df: DataFrame, key: str, key_type: str, shingle: str
+) -> DataFrame:
+    """(key, m0..m{NUM_HASHES-1}): per-batch MinHash mins of each key's
+    shingles. Classic minhash cost structure: ONE md5 per shingle ->
+    31-bit int (the oracle's hv CTE; integer arithmetic, so the mins are
+    bitwise-identical), then NUM_HASHES cheap affine permutations
+    (a_i*h + b_i) mod p as DuckDB MIN aggregates. `shingle` names a
+    string column, or an array<string> column that is unnested first.
+    The mins are final per key only when a key never spans two batches;
+    otherwise the caller combines them with a min-of-mins."""
+    from pyspark.sql.types import ArrayType
+
+    from .functions.hashing import NUM_HASHES
+
+    src = "_b"
+    if isinstance(df.schema[shingle].dataType, ArrayType):
+        src, shingle = f"(SELECT {key}, unnest({shingle}) AS s FROM _b)", "s"
+    # hex -> int via DuckDB's 0x string cast: measured 4.7x faster
+    # than the strpos/list_sum emulation and value-identical
+    hexpr = (
+        f"CAST(('0x' || substring(md5({shingle}), 1, 8)) AS BIGINT) % 2147483647"
+    )
+    min_exprs = ", ".join(
+        f"MIN(({2 * i + 1} * h + {1000003 * i + 12345}) % 2147483647) AS m{i}"
+        for i in range(NUM_HASHES)
+    )
+    sql = (
+        f"WITH hv AS (SELECT {key}, {hexpr} AS h FROM {src})"
+        f" SELECT {key}, {min_exprs} FROM hv GROUP BY {key}"
+    )
+    schema = f"{key} {key_type}, " + ", ".join(
+        f"m{i} long" for i in range(NUM_HASHES)
+    )
+    return _duck_map(df, sql, schema)
 
 
 def _dd02_candidates(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
@@ -681,50 +710,12 @@ def _dd02_candidates(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame
     the checkpointed (doc_id, shingle-set) table. Consumed by dd02 (set
     Jaccard verify) and dd12 (weighted Jaccard verify).
 
-    Classic minhash cost structure: ONE md5 per shingle -> 32-bit int,
-    then NUM_HASHES cheap affine permutations (a_i*h + b_i) mod p. The
-    permutation mins run as 128 DuckDB MIN aggregates per Arrow batch
-    (see the inline comment at sig_sql) — a map-only stage, since each
-    doc's shingles arrive as one row."""
+    Each doc's shingle array is one whole row, so `_minhash_mins` yields
+    the FINAL per-doc signature in a map-only stage."""
     from .functions.hashing import BAND_CAP, NUM_BANDS, NUM_HASHES, ROWS_PER_BAND
 
     mat = _shingle_mat(spark, sf)  # one checkpointed pass; 3 consumers below
-    # Signature build runs per Arrow batch in DuckDB (guide §4.2, the
-    # _tok_counts pattern): each doc's shingle array is one whole row,
-    # so a per-batch GROUP BY doc_id already yields the FINAL 128 mins —
-    # the JVM explode + 128-MIN groupBy shuffled ~unreduced exploded
-    # rows (one doc never spans two map partitions, so partial
-    # aggregation had nothing to combine). The md5->int expression is
-    # the oracle's own hv CTE (integer arithmetic, bitwise-identical
-    # mins); zero Exchange in this stage.
-    # hex -> int via DuckDB's 0x string cast: measured 4.7x faster
-    # than the strpos/list_sum emulation and value-identical
-    hexpr = "CAST(('0x' || substring(md5(s), 1, 8)) AS BIGINT) % 2147483647"
-    min_exprs = ", ".join(
-        f"MIN(({2 * i + 1} * h + {1000003 * i + 12345}) % 2147483647) AS m{i}"
-        for i in range(NUM_HASHES)
-    )
-    sig_sql = (
-        f"WITH hv AS (SELECT doc_id, {hexpr} AS h"
-        " FROM (SELECT doc_id, unnest(sh) AS s FROM _b))"
-        f" SELECT doc_id, {min_exprs} FROM hv GROUP BY doc_id"
-    )
-
-    def sig_build(batches):
-        import duckdb
-        import pyarrow as pa
-
-        con = duckdb.connect()
-        con.execute("SET threads TO 1")  # Spark owns the cores; an
-        # all-core pool per task oversubscribes 22 tasks x 32 threads
-        for b in batches:
-            _b = pa.Table.from_batches([b])  # noqa: F841 (duckdb scan)
-            yield from con.execute(sig_sql).fetch_arrow_table().to_batches()
-
-    sig_schema = "doc_id long, " + ", ".join(
-        f"m{i} long" for i in range(NUM_HASHES)
-    )
-    sig = mat.mapInArrow(sig_build, sig_schema).select(
+    sig = _minhash_mins(mat, "doc_id", "long", "sh").select(
         "doc_id", F.array(*[f"m{i}" for i in range(NUM_HASHES)]).alias("sig")
     )
     # checkpoint the tiny (doc_id, band_key) table: it feeds THREE
@@ -2209,6 +2200,39 @@ def _ivf_centroid_df(e: DataFrame) -> DataFrame:
     )
 
 
+def _ivf_probe(spark: SparkSession, sf: str, nprobe: int) -> DataFrame:
+    """IVF search: assign the query vector (vec_id=0) to its `nprobe`
+    nearest coarse centroids (|labels| tiny rows — broadcast), then scan
+    ONLY those cells' vectors for the top-10 by L2. At scale the corpus
+    is partitioned by assigned label (the IVF lists), so the probe is a
+    partition-pruned scan of nprobe/n_cells of the corpus — the point of
+    IVF; no distance is computed outside the probed cells."""
+    e = _ivf_embed(spark, sf)
+    cent_vec = _ivf_centroid_df(e)
+    q = e.filter(F.col("vec_id") == 0).selectExpr("v AS qv")
+    dist_c = (
+        "sqrt(aggregate(zip_with(centroid, qv, (a, b) -> (a - b) * (a - b)),"
+        " CAST(0 AS double), (acc, x) -> acc + x))"
+    )
+    best = (
+        cent_vec.crossJoin(F.broadcast(q))
+        .selectExpr("label", "qv", f"{dist_c} AS dc")
+        .orderBy(F.col("dc").asc(), F.col("label").asc())
+        .limit(nprobe)
+    )
+    dist_v = (
+        "sqrt(aggregate(zip_with(v, qv, (a, b) -> (a - b) * (a - b)),"
+        " CAST(0 AS double), (acc, x) -> acc + x))"
+    )
+    return (
+        e.join(F.broadcast(best.select("label", "qv")), "label")
+        .filter(F.col("vec_id") != 0)
+        .selectExpr("vec_id", "label", f"round({dist_v}, 6) AS dist")
+        .orderBy(F.col("dist").asc(), F.col("vec_id").asc())
+        .limit(10)
+    )
+
+
 # the centroid CTE chain, reusable by q19 and sim03 oracles
 _SQL_IVF_CENT_CTES = """e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
 comp AS (SELECT label, gs.i - 1 AS pos, v[gs.i] AS x
@@ -2254,36 +2278,9 @@ FROM d GROUP BY label
 
 
 def sim03_ivf_search(spark: SparkSession, sf: str) -> DataFrame:
-    """IVF SEARCH completing q19's build step: assign the query vector
-    (vec_id=0) to its nearest coarse centroid (10 tiny rows — broadcast),
-    then scan ONLY that cell's vectors (nprobe=1) for the top-10 by L2.
-    At scale the corpus is partitioned by assigned label (the IVF lists),
-    so the probe is a partition-pruned scan of corpus/n_cells rows — the
-    point of IVF; no distance is computed outside the probed cell."""
-    e = _ivf_embed(spark, sf)
-    cent_vec = _ivf_centroid_df(e)
-    q = e.filter(F.col("vec_id") == 0).selectExpr("v AS qv")
-    dist_c = (
-        "sqrt(aggregate(zip_with(centroid, qv, (a, b) -> (a - b) * (a - b)),"
-        " CAST(0 AS double), (acc, x) -> acc + x))"
-    )
-    best = (
-        cent_vec.crossJoin(F.broadcast(q))
-        .selectExpr("label", "qv", f"{dist_c} AS dc")
-        .orderBy(F.col("dc").asc(), F.col("label").asc())
-        .limit(1)
-    )
-    dist_v = (
-        "sqrt(aggregate(zip_with(v, qv, (a, b) -> (a - b) * (a - b)),"
-        " CAST(0 AS double), (acc, x) -> acc + x))"
-    )
-    return (
-        e.join(F.broadcast(best), "label")
-        .filter(F.col("vec_id") != 0)
-        .selectExpr("vec_id", "label", f"round({dist_v}, 6) AS dist")
-        .orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-        .limit(10)
-    )
+    """IVF SEARCH completing q19's build step with nprobe=1: scan ONLY
+    the query's nearest cell (see `_ivf_probe`)."""
+    return _ivf_probe(spark, sf, 1)
 
 
 SQL_SIM03 = f"""
@@ -2907,33 +2904,8 @@ FROM n GROUP BY source HAVING SUM(n_ws) > 0
 def sim05_ivf_multiprobe(spark: SparkSession, sf: str) -> DataFrame:
     """IVF search with nprobe=2 (sim03 is nprobe=1): scan the TWO nearest
     cells and take the global top-10 — the standard recall knob when the
-    true neighbor sits just across a Voronoi boundary. The probe is still
-    a partition-pruned scan of 2/n_cells of the corpus; nothing outside
-    the probed cells is touched."""
-    e = _ivf_embed(spark, sf)
-    cent_vec = _ivf_centroid_df(e)
-    q = e.filter(F.col("vec_id") == 0).selectExpr("v AS qv")
-    dist_c = (
-        "sqrt(aggregate(zip_with(centroid, qv, (a, b) -> (a - b) * (a - b)),"
-        " CAST(0 AS double), (acc, x) -> acc + x))"
-    )
-    best2 = (
-        cent_vec.crossJoin(F.broadcast(q))
-        .selectExpr("label", "qv", f"{dist_c} AS dc")
-        .orderBy(F.col("dc").asc(), F.col("label").asc())
-        .limit(2)
-    )
-    dist_v = (
-        "sqrt(aggregate(zip_with(v, qv, (a, b) -> (a - b) * (a - b)),"
-        " CAST(0 AS double), (acc, x) -> acc + x))"
-    )
-    return (
-        e.join(F.broadcast(best2.select("label", "qv")), "label")
-        .filter(F.col("vec_id") != 0)
-        .selectExpr("vec_id", "label", f"round({dist_v}, 6) AS dist")
-        .orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-        .limit(10)
-    )
+    true neighbor sits just across a Voronoi boundary."""
+    return _ivf_probe(spark, sf, 2)
 
 
 _SIM06_OVERSAMPLE = 4  # int8 screen keeps k*oversample candidates for rescore
@@ -3911,12 +3883,12 @@ def dd10_span_coverage(spark: SparkSession, sf: str) -> DataFrame:
     # and the hits semi-join — without it the tokenize + per-start md5
     # pass runs twice; repartition first or the single small parquet file
     # pins that pass to 1-2 scan tasks (the dd02/dd03 pattern).
-    # Built via DuckDB-in-mapInArrow (the oracle's own `starts` CTE —
-    # guide §4.2, same pattern as _shingle_mat): warm throughput matches
-    # the JVM expression chain, but the COLD pass is ~2x faster (2.8 vs
-    # 5.9 s at 10x) because the slice/array_join/md5 codegen warm-up is
-    # avoided, and the bench times every query's first pass cold.
-    # Output proven row-identical (exceptAll diff 0 at 10x).
+    # Built by `_duck_map` (the SQL is the oracle's own `starts` CTE):
+    # warm throughput matches the JVM expression chain, but the COLD
+    # pass is ~2x faster (2.8 vs 5.9 s at 10x) because the
+    # slice/array_join/md5 codegen warm-up is avoided, and the bench
+    # times every query's first pass cold. Output proven row-identical
+    # (exceptAll diff 0 at 10x).
     td = _TOKS_DUCK.format(c="text")
     sql = f"""
 SELECT doc_id, len(t) AS n_tokens, CAST(i AS BIGINT) AS s,
@@ -3924,21 +3896,11 @@ SELECT doc_id, len(t) AS n_tokens, CAST(i AS BIGINT) AS s,
 FROM (SELECT doc_id, {td} AS t FROM _b),
      unnest(generate_series(1, len(t) - {_SPAN_W} + 1)) AS u(i)
 WHERE len(t) >= {_SPAN_W}"""
-
-    def build(batches):
-        import duckdb
-        import pyarrow as pa
-
-        con = duckdb.connect()
-        con.execute("SET threads TO 1")  # Spark owns the cores; an
-        # all-core pool per task oversubscribes 22 tasks x 32 threads
-        for b in batches:
-            _b = pa.Table.from_batches([b])  # noqa: F841 (duckdb scan)
-            yield from con.execute(sql).fetch_arrow_table().to_batches()
-
     starts = _checkpoint(
-        _docs_par(spark, sf).select("doc_id", "text")
-        .mapInArrow(build, "doc_id long, n_tokens long, s long, g string"),
+        _duck_map(
+            _docs_par(spark, sf).select("doc_id", "text"), sql,
+            "doc_id long, n_tokens long, s long, g string",
+        ),
         "dd10_starts", key=f"dd10_starts:{_sfkey(sf)}",
     )
     shared = (
@@ -6751,47 +6713,20 @@ def dd16_source_overlap(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale shape: exact intersections use the inverted index (see
     _dd16_sets); per-source set sizes and signatures are each one
-    groupBy(source) with map-side combine (the 128 MINs follow dd02's
-    codegen'd-aggregate form); signatures re-enter as two broadcast
+    groupBy(source) with map-side combine (the signature's partial
+    mins come from `_minhash_mins`); signatures re-enter as two broadcast
     equi-joins onto the pair rows (the non-equi pairing is inherited
     from the inverted index — never a BNLJ). Only the |sources|-sized
     tables ever sit on the reduce side."""
     from .functions.hashing import NUM_HASHES
 
     ss, sizes, inter = _dd16_sets(spark, sf)
-    # per-source mins computed as PARTIAL per-batch DuckDB aggregates
-    # (the dd02 sig pattern; md5->int is the oracle's hv expression),
-    # then a tiny JVM min-of-mins per source: sources span batches, so
-    # unlike dd02 one JVM combine remains — over |sources| x #batches
-    # rows instead of the full exploded (source, shingle-hash) table.
-    # hex -> int via DuckDB's 0x string cast: measured 4.7x faster
-    # than the strpos/list_sum emulation and value-identical
-    hexpr = "CAST(('0x' || substring(md5(sh), 1, 8)) AS BIGINT) % 2147483647"
-    min_exprs = ", ".join(
-        f"MIN(({2 * i + 1} * h + {1000003 * i + 12345}) % 2147483647) AS m{i}"
-        for i in range(NUM_HASHES)
-    )
-    sig_sql = (
-        f"WITH hv AS (SELECT source, {hexpr} AS h FROM _b)"
-        f" SELECT source, {min_exprs} FROM hv GROUP BY source"
-    )
-
-    def sig_build(batches):
-        import duckdb
-        import pyarrow as pa
-
-        con = duckdb.connect()
-        con.execute("SET threads TO 1")  # Spark owns the cores; an
-        # all-core pool per task oversubscribes 22 tasks x 32 threads
-        for b in batches:
-            _b = pa.Table.from_batches([b])  # noqa: F841 (duckdb scan)
-            yield from con.execute(sig_sql).fetch_arrow_table().to_batches()
-
-    sig_schema = "source string, " + ", ".join(
-        f"m{i} long" for i in range(NUM_HASHES)
-    )
+    # sources span batches, so unlike dd02 the per-batch mins are
+    # PARTIAL and one tiny JVM min-of-mins per source remains — over
+    # |sources| x #batches rows instead of the full exploded
+    # (source, shingle-hash) table
     sig = (
-        ss.mapInArrow(sig_build, sig_schema)
+        _minhash_mins(ss, "source", "string", "sh")
         .groupBy("source")
         .agg(*[F.min(f"m{i}").alias(f"m{i}") for i in range(NUM_HASHES)])
         .select(

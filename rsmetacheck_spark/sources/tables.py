@@ -1,11 +1,10 @@
-"""Table layer: Iceberg when a catalog is configured, parquet-with-manifest
-otherwise (SURVEY §7 risk list: "if the runtime lacks an Iceberg catalog
-jar, the table layer must degrade to parquet ... without changing the
-pipeline API").
+"""Table layer: parquet-with-manifest, the degrade path of the SURVEY §7
+risk list ("if the runtime lacks an Iceberg catalog jar, the table layer
+must degrade to parquet ... without changing the pipeline API").
 
-The sandbox image has no Iceberg jars, so `iceberg_available()` is False
-here and all writes go through the parquet shim; the API (read_table /
-write_table / snapshot id) is what the pipeline codes against.
+The API the pipeline codes against is `write_table` (parquet + a snapshot
+manifest), `read_manifest`, `read_table_pruned` (source-pruned reads)
+and `write_bucketed` (shuffle-free joins on a recurring key).
 """
 
 from __future__ import annotations
@@ -15,17 +14,6 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark.conf.get("spark.sql.catalog.spark_catalog")
-        jvm_ok = "Iceberg" in str(
-            spark.conf.get("spark.sql.extensions", "")
-        )
-        return jvm_ok
-    except Exception:
-        return False
 
 
 def write_table(
@@ -41,10 +29,6 @@ def write_table(
     with open(os.path.join(path, "_manifest.json"), "w") as fh:
         json.dump({"snapshot": snapshot, "partition_by": list(partition_by)}, fh)
     return snapshot
-
-
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def read_table_pruned(spark: SparkSession, path: str, **eq_filters) -> DataFrame:
@@ -94,6 +78,3 @@ def read_manifest(path: str) -> dict:
     with open(os.path.join(path, "_manifest.json")) as fh:
         return json.load(fh)
 
-
-def testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

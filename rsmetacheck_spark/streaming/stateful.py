@@ -7,6 +7,7 @@ exceeds `gap_sec`. Each batch emits the user's running totals; the final
 emission must equal the batch sessionization (queries.q05_sessionize) when
 events arrive in event-time order per user — verified by
 tests/test_stateful_streaming.py with a multi-file time-ordered stream.
+An event with a null timestamp raises ValueError naming its user.
 """
 
 from __future__ import annotations
@@ -38,15 +39,20 @@ def _update(
     if len(pdf):
         import numpy as np
 
+        if pdf["ts"].isna().any():
+            raise ValueError(
+                f"user {key[0]}: event with a null timestamp; a session "
+                "gap to it is undefined"
+            )
         pdf = pdf.sort_values(["ts", "event_id"])
-        # whole-second truncation matches the batch q05 semantics
-        # (unix_timestamp/epoch both truncate). Vectorized: the previous
-        # per-event Python loop paid a Timestamp.timestamp() call per
-        # row (~1M rows per run at bench scale); int64-ns floor-division
-        # is the same whole-second value, and the gap test over adjacent
+        # whole seconds truncated toward zero, as batch q05's
+        # unix_timestamp does (floor would put 23:59:59.5 on 1969-12-31
+        # at -1, not 0). Vectorized in int64 ns: floats cannot hold ns
+        # since the epoch exactly (> 2^53). The gap test over adjacent
         # pairs + the carry-in comparison against the state's last_ts is
-        # exactly the loop's session-increment count.
-        t = (pdf["ts"].astype("int64") // 1_000_000_000).to_numpy()
+        # exactly a per-event loop's session-increment count.
+        ns = pdf["ts"].astype("int64").to_numpy()
+        t = np.where(ns < 0, -(-ns // 1_000_000_000), ns // 1_000_000_000)
         n_sessions += int((np.diff(t) > GAP_SEC).sum())
         if last_ts is None or t[0] - last_ts > GAP_SEC:
             n_sessions += 1

@@ -36,7 +36,9 @@ DOC_QUERIES = (
     "q10_token_stats_by_source", "q11_top_ngrams", "q12_fingerprints",
     "q14_rollup_docs", "q20_quality_score", "q21_median_chars_by_source",
     "q22_rolling_hash", "dd01_exact_groups", "dd02_minhash_lsh_pairs",
-    "dd03_jaccard_pairs", "dd04_simhash",
+    "dd03_jaccard_pairs", "dd04_simhash", "dd10_span_coverage",
+    "dd12_weighted_jaccard", "dd13_containment", "dd15_tfidf_pairs",
+    "dd16_source_overlap", "dd17_source_containment",
     "q23_tfidf_terms", "q24_bigram_pmi", "q25_vocab_coverage",
     "q26_repeat_collapse", "q27_contamination", "q28_mixing_weights",
     "q29_packing_histogram", "q30_weighted_sample", "q31_chunk_windows",

@@ -7,10 +7,12 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from rsmetacheck_spark.queries import q05_sessionize
-from rsmetacheck_spark.streaming.stateful import sessionize_stateful
+from rsmetacheck_spark.streaming.stateful import _update, sessionize_stateful
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -67,3 +69,46 @@ def test_stateful_matches_batch(spark, tmp_path):
         for r in q05_sessionize(spark, SF_DIR).collect()
     }
     assert got == want and len(want) >= 10
+
+
+class _StubState:
+    """The slice of GroupState that `_update` touches."""
+
+    def __init__(self):
+        self.exists, self.get = False, None
+
+    def update(self, value):
+        self.exists, self.get = True, value
+
+
+def _run_update(ts):
+    events = pd.DataFrame({
+        "user_id": [7] * len(ts),
+        "ts": pd.to_datetime([pd.Timestamp(t) for t in ts]),
+        "event_id": range(len(ts)),
+    })
+    state = _StubState()
+    (out,) = _update((7,), iter([events]), state)
+    return out.iloc[0]["n_sessions"], out.iloc[0]["n_events"], state.get
+
+
+def test_update_truncates_seconds_like_batch(spark, tmp_path):
+    """Pre-epoch fractional seconds truncate toward zero, as Spark's
+    unix_timestamp does: 23:29:59.5 -> -1800 and 00:00:00 -> 0 are 1800 s
+    apart (one session). Flooring would make it -1801, a gap of 1801 s."""
+    ts = ["1969-12-31 23:29:59.5", "1970-01-01 00:00:00"]
+    n_sessions, n_events, state = _run_update(ts)
+    assert (n_sessions, n_events) == (1, 2)
+    assert state[0] == 0
+    sf = str(tmp_path)
+    spark.createDataFrame(
+        [(i, 7, pd.Timestamp(t).to_pydatetime()) for i, t in enumerate(ts)],
+        "event_id long, user_id long, ts timestamp",
+    ).write.parquet(os.path.join(sf, "events.parquet"))
+    (row,) = q05_sessionize(spark, sf).collect()
+    assert (row.n_sessions, row.n_events) == (n_sessions, n_events)
+
+
+def test_update_rejects_null_timestamp():
+    with pytest.raises(ValueError, match="user 7"):
+        _run_update(["1970-01-01 00:00:00", None])
